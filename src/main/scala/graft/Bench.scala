@@ -462,14 +462,12 @@ object Bench {
     // ~1.6 KB for 51 lines, and sf/isolate at the END so even a clipped
     // head still reconstructs): same methodology, same values, nothing
     // renamed or removed from "queries". The full record still exists,
-    // untruncated, in the sidecar (the repo's own regression-gate prev)
-    // and on stderr for the session log. A SUBSET run (BENCH_ONLY —
-    // isolation children, ad-hoc adjudication) keeps printing the full
-    // record: its line is small, and the isolating parent parses the
-    // child's "spread" from it.
+    // untruncated, in the sidecar (the repo's own regression-gate prev).
+    // A SUBSET run (BENCH_ONLY — isolation children, ad-hoc adjudication)
+    // keeps printing the full record: its line is small, and the
+    // isolating parent parses the child's "spread" from it.
     println(if (only.isEmpty) compactLine(total, qs, runsPerQuery, isolate, sfDir)
       else line)
-    if (only.isEmpty) System.err.println(line)
     // untruncated sidecar of this run's own JSON line: the preferred prev
     // for the NEXT run, so the regression gate never again depends on the
     // driver wrapper's tail keeping our prefix intact. An isolated run

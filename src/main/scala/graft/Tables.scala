@@ -134,9 +134,8 @@ object Tables {
     // old max(8, cores/4) so small inputs keep yesterday's shape (every
     // sf0.1 table still lands exactly on 8 — the driver's bench stays
     // comparable, q02's documented cost unchanged), and clamped at the
-    // session's cores. At sf1+ a 32-core session now actually uses >8
-    // lanes (measured in OPTIMIZATION_r19.md §4); past parallelizeMaxBytes
-    // the whole spread stays a structural no-op as before.
+    // session's cores. Past parallelizeMaxBytes the whole spread stays a
+    // structural no-op as before.
     val perTask = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.graft.scan.bytesPerTask",
         if (hashKey.isDefined) "4m" else "1m"))

@@ -480,11 +480,7 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
     * (increment under the reaper's lock, decrement when done) — lets
     * specs hold a statement "in flight" deterministically. */
   private[graft] def withTransactionPinned[A](id: String)(body: => A): A = {
-    val t = synchronized {
-      val x = transactions.get(id)
-      x.foreach(_.inFlight.incrementAndGet())
-      x
-    }
+    val t = pinTransaction(id)
     try body finally t.foreach(_.inFlight.decrementAndGet())
   }
 
@@ -947,38 +943,81 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
   }
 
   /** Execute one query against db/branch. Never throws: errors surface in
-    * QueryResponse.error (matching the reference's per-query error shape). */
+    * QueryResponse.error (matching the reference's per-query error shape).
+    * A read's rows are collected into the one response, driver-bounded by
+    * [[collectResponse]]. */
   def execute(db: String, branch: String, input: QueryInput,
-      key: AccessKey = AccessKey.root): QueryResponse = {
+      key: AccessKey = AccessKey.root): QueryResponse =
+    runStatement(db, branch, input, key, collectResponse)
+
+  /** Execute with chunked result delivery — the scale path for large
+    * result sets (B8). The same statement pipeline as [[execute]]; only the
+    * row sink differs: a read's rows are fetched with toLocalIterator (the
+    * driver holds one partition at a time, never the whole result — the
+    * reference streams rows from sqlite3_step the same way,
+    * pkg/sqlite3/statement.go:274-344) and emitted as QueryResponse batches
+    * of `batchSize` rows sharing the query id; the last batch carries the
+    * latency. Every other statement emits its one routed response, and a
+    * failure emits one error response after any batches already sent. */
+  def executeStreamed(db: String, branch: String, input: QueryInput,
+      key: AccessKey = AccessKey.root, batchSize: Int = 4096)
+      (emit: QueryResponse => Unit): Unit =
+    emit(runStatement(db, branch, input, key, streamRows(batchSize, emit)))
+
+  /** How a read statement's DataFrame becomes its response: collected
+    * whole (batch endpoint) or emitted in batches with the last returned
+    * (stream endpoint). */
+  private type RowSink = (DataFrame, QueryInput) => QueryResponse
+
+  /** The statement pipeline both entry points share, phase by phase:
+    * pin the statement's transaction, bind MATCH parameters, authorize,
+    * route (reads hand their DataFrame to `sink`), record the query
+    * metric; then unpin and drop the statement's scratch views. */
+  private def runStatement(db: String, branch: String, input0: QueryInput,
+      key: AccessKey, sink: RowSink): QueryResponse = {
     val t0 = System.nanoTime()
-    // pin the statement's transaction for the statement's duration: the
-    // expiry reaper never deletes a pinned transaction's staged files, so
-    // a long-running statement can't have them vanish mid-flight. The
-    // increment happens INSIDE the same lock as the lookup — done after,
-    // the reaper could observe inFlight==0 between the two and reap
-    val pinned =
-      if (input.transactionId.isEmpty) None
-      else synchronized {
-        val t = transactions.get(input.transactionId)
-        t.foreach(_.inFlight.incrementAndGet())
-        t
-      }
+    val pinned = pinTransaction(input0.transactionId)
     pinned.foreach(t => notePin(t.id, +1))
     try {
+      val input = bindMatchParams(input0)
       Authorizer.authorize(sess, key, db, branch, input.statement)
-      val r = route(db, branch, input, key)
+      val r = route(db, branch, input, key, sink)
       val latency = (System.nanoTime() - t0) / 1e9
-      metrics.record(db, branch, input.statement, latency)
+      metrics.record(db, branch, input0.statement, latency)
       r.copy(latency = latency)
     } catch {
       case e: Throwable =>
-        QueryResponse(input.id, Nil, Nil, error = Option(e.getMessage).getOrElse(e.toString),
-          transactionId = input.transactionId)
+        QueryResponse(input0.id, Nil, Nil, error = Option(e.getMessage).getOrElse(e.toString),
+          transactionId = input0.transactionId)
     } finally {
       pinned.foreach { t => t.inFlight.decrementAndGet(); notePin(t.id, -1) }
       dropScratchViews()
     }
   }
+
+  /** Pin a statement's transaction for the statement's duration: the
+    * expiry reaper never deletes a pinned transaction's staged files, so a
+    * long-running statement can't have them vanish mid-flight. The
+    * increment happens INSIDE the same lock as the lookup — done after,
+    * the reaper could observe inFlight==0 between the two and reap. */
+  private def pinTransaction(id: String): Option[Txn] =
+    if (id.isEmpty) None
+    else synchronized {
+      val t = transactions.get(id)
+      t.foreach(_.inFlight.incrementAndGet())
+      t
+    }
+
+  /** `fts MATCH ?` binds through SQLite's normal parameter path in the
+    * reference; the MATCH rewrites here need the literal, so statements
+    * with MATCH get their 5-type params bound into the text (quote-aware). */
+  private def bindMatchParams(input: QueryInput): QueryInput =
+    if (input.parameters.nonEmpty &&
+        matchWordRe.findFirstIn(Sql.maskLiterals(input.statement)).isDefined)
+      input.copy(
+        statement = Sql.substituteParams(input.statement, input.parameters),
+        parameters = Nil)
+    else input
 
   /** Per-statement scratch views (reserved `__graft_`/`__fts_match` space)
     * are dropped when the statement ends: the pooled handler thread's Spark
@@ -1014,7 +1053,8 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
   // --- routing ------------------------------------------------------------
 
   private def route(db: String, branch: String, input: QueryInput,
-      key: AccessKey): QueryResponse = {
+      key: AccessKey, sink: RowSink): QueryResponse = {
+    def read(): QueryResponse = sink(readDataFrame(db, branch, input, key), input)
     val stmt = input.statement.trim
     val k = Classifier.kind(stmt)
     k match {
@@ -1041,7 +1081,7 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
       }
       case "ddl" | "dml" =>
         writeQueues(db, branch).run(write(db, branch, input))
-      case "dql" => select(db, branch, input, key)
+      case "dql" => read()
       case _ => stmt match {
         case savepointRe(name) =>
           demandTxnOwnership(db, branch, input.transactionId)
@@ -1092,7 +1132,7 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
           // path; genuinely malformed SQL surfaces as a parse error (bare
           // EXPLAIN also lands here and resolves through Spark's native
           // EXPLAIN statement).
-          select(db, branch, input, key)
+          read()
       }
     }
   }
@@ -1957,27 +1997,11 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
       .select(contentCols.map(content(_)) ++ extras.map(res(_)): _*)
   }
 
-  private def select(db: String, branch: String, input0: QueryInput,
-      key: AccessKey): QueryResponse = {
-    val (df, input) = readDataFrame(db, branch, input0, key)
-    collectResponse(df, input)
-  }
-
   /** Build a read statement's DataFrame WITHOUT executing it — shared by
-    * [[select]] and EXPLAIN QUERY PLAN (which needs the planned query, not
-    * its rows). Returns the possibly-param-substituted input alongside. */
-  private def readDataFrame(db: String, branch: String, input0: QueryInput,
-      key: AccessKey): (DataFrame, QueryInput) = {
-    // `fts MATCH ?` binds through SQLite's normal parameter path in the
-    // reference; the MATCH rewrites here need the literal, so bind the
-    // 5-type params into the text first (quote-aware) on MATCH statements
-    val input =
-      if (input0.parameters.nonEmpty &&
-          matchWordRe.findFirstIn(Sql.maskLiterals(input0.statement)).isDefined)
-        input0.copy(
-          statement = Sql.substituteParams(input0.statement, input0.parameters),
-          parameters = Nil)
-      else input0
+    * the read route (which hands it to the entry point's row sink) and
+    * EXPLAIN QUERY PLAN (which needs the planned query, not its rows). */
+  private def readDataFrame(db: String, branch: String, input: QueryInput,
+      key: AccessKey): DataFrame = {
     val txn = txnFor(db, branch, input)
     input.statement.trim match {
       case matchRe(cols, from, target, q, orderBy, limitPart)
@@ -1985,9 +2009,8 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
             effFtsIndex(db, branch, unquote(from), txn).isDefined =>
         val result = ftsSearch(db, branch, unquote(from), q.replace("''", "'"), txn)
         result.createOrReplaceTempView("__fts_match")
-        val df = sess.sql(s"SELECT $cols FROM __fts_match " +
+        sess.sql(s"SELECT $cols FROM __fts_match " +
           s"${Option(orderBy).getOrElse("")} ${Option(limitPart).getOrElse("")}")
-        (df, input)
       case _ =>
         registerViews(db, branch, txn)
         // attached-database references (alias.t) rewrite onto their views;
@@ -2008,9 +2031,8 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
         // query skips the ANTLR parse entirely
         val plan = planCache.get(stmtM, key.id)(
           sess.sessionState.sqlParser.parsePlan(stmtM))
-        val df = org.apache.spark.sql.GraftSqlBridge.ofRows(
+        org.apache.spark.sql.GraftSqlBridge.ofRows(
           sess, plan, input.parameters.map(paramToJvm).toArray)
-        (df, input)
     }
   }
 
@@ -2031,7 +2053,7 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
     if (kind != "dql" && kind != "other")
       throw new IllegalArgumentException(
         "EXPLAIN QUERY PLAN supports read statements only")
-    val (df, _) = readDataFrame(db, branch, input, key)
+    val df = readDataFrame(db, branch, input, key)
     val rows = mutable.ArrayBuffer[Seq[SqlValue]]()
     def walk(p: org.apache.spark.sql.execution.SparkPlan, parent: Long): Unit = {
       val id = rows.size.toLong
@@ -2045,86 +2067,6 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
       rows.toSeq, transactionId = input.transactionId)
   }
 
-  /** Execute with chunked result delivery — the scale path for large
-    * result sets (B8). DQL results are fetched with toLocalIterator (the
-    * driver holds one partition at a time, never the whole result — the
-    * reference streams rows from sqlite3_step the same way,
-    * pkg/sqlite3/statement.go:274-344) and emitted as QueryResponse
-    * batches of `batchSize` rows sharing the query id. Non-DQL statements
-    * and engine-dialect queries (MATCH) emit exactly one response. */
-  def executeStreamed(db: String, branch: String, input0: QueryInput,
-      key: AccessKey = AccessKey.root, batchSize: Int = 4096)
-      (emit: QueryResponse => Unit): Unit = {
-    // parameterized MATCH binds into the text exactly as on the batch
-    // path — the rewrites need the literal
-    val input =
-      if (input0.parameters.nonEmpty &&
-          matchWordRe.findFirstIn(Sql.maskLiterals(input0.statement)).isDefined)
-        input0.copy(
-          statement = Sql.substituteParams(input0.statement, input0.parameters),
-          parameters = Nil)
-      else input0
-    val stmt = input.statement.trim
-    val kind = Classifier.kind(stmt)
-    // plain SELECTs and read-shaped 'other' statements (WITH ... SELECT,
-    // VALUES, parenthesized selects) stream; engine VERBS (ATTACH/DETACH,
-    // SAVEPOINT/RELEASE) and MATCH rewrites take the full routed path
-    val isVerb = kind == "other" &&
-      (attachRe.pattern.matcher(stmt).matches() ||
-        detachRe.pattern.matcher(stmt).matches() ||
-        savepointRe.pattern.matcher(stmt).matches() ||
-        releaseRe.pattern.matcher(stmt).matches())
-    val plainDql = (kind == "dql" || (kind == "other" && !isVerb)) &&
-      !matchRe.pattern.matcher(stmt).matches()
-    if (!plainDql) { emit(execute(db, branch, input, key)); return }
-    val t0 = System.nanoTime()
-    val pinned = // pin under the reaper's lock, like execute()
-      if (input.transactionId.isEmpty) None
-      else synchronized {
-        val t = transactions.get(input.transactionId)
-        t.foreach(_.inFlight.incrementAndGet())
-        t
-      }
-    pinned.foreach(t => notePin(t.id, +1))
-    try {
-      Authorizer.authorize(sess, key, db, branch, stmt)
-      val txn = txnFor(db, branch, input)
-      registerViews(db, branch, txn)
-      val atts = attachmentsFor(db, branch)
-      val stmtR0 = if (atts.isEmpty) stmt else Sql.rewriteAttached(stmt, atts.keySet)
-      if (atts.nonEmpty) authorizeAttachedReads(key, atts, stmt, stmtR0)
-      val stmtR = rewriteCollate(rewriteGlobOperator(
-        rewriteMatchAnywhere(db, branch, stmtR0, txn).getOrElse(stmtR0)))
-      val df =
-        if (input.parameters.isEmpty) sess.sql(stmtR)
-        else sess.sql(stmtR, input.parameters.map(paramToJvm).toArray)
-      val cols = df.columns.toSeq
-      val it = df.toLocalIterator()
-      val buf = mutable.ArrayBuffer[Seq[SqlValue]]()
-      var emitted = false
-      def flush(): Unit = {
-        emit(QueryResponse(input.id, cols, buf.toSeq,
-          transactionId = input.transactionId))
-        buf.clear(); emitted = true
-      }
-      while (it.hasNext) {
-        val r = it.next()
-        buf += (0 until r.length).map(i => SqlValue.fromAny(r.get(i)))
-        if (buf.length >= batchSize) flush()
-      }
-      if (buf.nonEmpty || !emitted) flush()
-      metrics.record(db, branch, input.statement, (System.nanoTime() - t0) / 1e9)
-    } catch {
-      case e: Throwable =>
-        emit(QueryResponse(input.id, Nil, Nil,
-          error = Option(e.getMessage).getOrElse(e.toString),
-          transactionId = input.transactionId))
-    } finally {
-      pinned.foreach { t => t.inFlight.decrementAndGet(); notePin(t.id, -1) }
-      dropScratchViews()
-    }
-  }
-
   /** Batch results are driver-bounded (r2 VERDICT "wrong #3"): the JSON
     * batch endpoint materializes the full result, so a runaway SELECT
     * would OOM the driver. `limit(cap+1)` keeps the fetch itself bounded
@@ -2136,10 +2078,29 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
     if (rows.length > maxBatchRows)
       throw new IllegalStateException(
         s"result exceeds $maxBatchRows rows; use the query/stream endpoint for large results")
-    QueryResponse(input.id, df.columns.toSeq,
-      rows.toSeq.map(r => (0 until r.length).map(i => SqlValue.fromAny(r.get(i)))),
+    QueryResponse(input.id, df.columns.toSeq, rows.toSeq.map(rowValues),
       transactionId = input.transactionId)
   }
+
+  /** The stream endpoint's sink: rows come off toLocalIterator and every
+    * full `batchSize` batch with rows after it is emitted at once; the
+    * last (possibly empty) batch is returned for the pipeline to stamp. */
+  private def streamRows(batchSize: Int, emit: QueryResponse => Unit)(
+      df: DataFrame, input: QueryInput): QueryResponse = {
+    val cols = df.columns.toSeq
+    def batch(rows: Seq[Seq[SqlValue]]) =
+      QueryResponse(input.id, cols, rows, transactionId = input.transactionId)
+    val it = df.toLocalIterator()
+    val buf = mutable.ArrayBuffer[Seq[SqlValue]]()
+    while (it.hasNext) {
+      buf += rowValues(it.next())
+      if (buf.length >= batchSize && it.hasNext) { emit(batch(buf.toSeq)); buf.clear() }
+    }
+    batch(buf.toSeq)
+  }
+
+  private def rowValues(r: Row): Seq[SqlValue] =
+    (0 until r.length).map(i => SqlValue.fromAny(r.get(i)))
 
   private def paramToJvm(p: Param): Any = p.value match {
     case SqlValue.IntVal(v) => v

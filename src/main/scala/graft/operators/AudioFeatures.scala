@@ -304,23 +304,6 @@ object AudioFeatures {
       zeroCrossings: Int = 16): Array[Short] = {
     require(srcRate > 0 && dstRate > 0, s"rates: $srcRate -> $dstRate")
     if (srcRate == dstRate) return samples.clone()
-    // r19 (verdict ask #5): dispatch to the polyphase table when the
-    // FP-exactness argument holds (reduced rate-ratio denominator a
-    // power of two — covers every doubling/halving and integer-factor
-    // pair, including p79's 8000<->16000), falling back to the r18
-    // bits-keyed memo otherwise. ResampleSpec pins polyphase == memo
-    // bitwise across rate pairs.
-    polyTable(srcRate, dstRate, zeroCrossings) match {
-      case Some(t) => resamplePoly(samples, srcRate, dstRate, zeroCrossings, t)
-      case None => resampleMemo(samples, srcRate, dstRate, zeroCrossings)
-    }
-  }
-
-  /** The r18 memoized direct-evaluation path — the fallback for rate
-    * pairs outside the polyphase exactness argument, and the reference
-    * twin ResampleSpec pins [[resamplePoly]] against. */
-  private[graft] def resampleMemo(samples: Array[Short], srcRate: Int,
-      dstRate: Int, zeroCrossings: Int): Array[Short] = {
     val nIn = samples.length
     val nOut = ((nIn.toLong * dstRate) / srcRate).toInt
     val out = new Array[Short](nOut)
@@ -355,136 +338,6 @@ object AudioFeatures {
           if (memo.size < 8192) memo.put(bits, sw)
         }
         acc += samples(i) * scale * sw(0) * sw(1)
-        i += 1
-      }
-      val v = math.round(acc)
-      out(j) = math.max(Short.MinValue.toLong,
-        math.min(Short.MaxValue.toLong, v)).toShort
-      j += 1
-    }
-    out
-  }
-
-  /** Precomputed sinc·window table for one (srcRate, dstRate,
-    * zeroCrossings): `tab` holds (sinc, win) pairs per (phase, tap
-    * offset). Bitwise-identity argument (ResampleSpec pins it): with the
-    * reduced rate ratio p/q and q = 2^m, `step` = p/2^m is exact, so for
-    * any output j with j·p < 2^52, `center = j*step` is exact, and
-    * `d = i - center` — a difference of exactly-representable values
-    * whose true result is a multiple of 2^-m of small magnitude — is
-    * exact and depends only on (i - floor(center), phase). The table is
-    * built by evaluating the ORIGINAL expressions at one representative
-    * j per phase, so a hit returns the identical doubles the direct
-    * evaluation would produce at any j. */
-  private[graft] final class PolyTable(val mBits: Int, val pNum: Long,
-    val tMin: Array[Int], val count: Array[Int], val base: Array[Int],
-    val tab: Array[Double])
-
-  private val polyTables =
-    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, PolyTable]()
-
-  /** The polyphase table for a rate pair, or None when the exactness
-    * argument does not apply (reduced denominator not a power of two,
-    * or the table would be unreasonably large). Tables are cached
-    * process-wide (bounded: ≤64 pairs, ≤2^21 taps each) — the values
-    * are pure functions of the rate pair, bit-identical across calls. */
-  private[graft] def polyTable(srcRate: Int, dstRate: Int,
-      zeroCrossings: Int): Option[PolyTable] = {
-    @annotation.tailrec def gcd(a: Int, b: Int): Int =
-      if (b == 0) a else gcd(b, a % b)
-    val g = gcd(srcRate, dstRate)
-    val p = srcRate / g
-    val q = dstRate / g
-    if ((q & (q - 1)) != 0 || q > 4096 || srcRate >= (1 << 24) ||
-        dstRate >= (1 << 24) || zeroCrossings <= 0 || zeroCrossings > 255)
-      return None
-    val scale = math.min(1.0, dstRate.toDouble / srcRate)
-    val halfWidth = zeroCrossings / scale
-    val width = 2L * math.ceil(halfWidth).toLong + 5
-    if (q.toLong * width > (1L << 21)) return None
-    val key: java.lang.Long =
-      ((srcRate.toLong << 24) | dstRate.toLong) << 8 | zeroCrossings
-    val cached = polyTables.get(key)
-    if (cached != null) return Some(cached)
-    val mBits = java.lang.Integer.numberOfTrailingZeros(q)
-    val step = srcRate.toDouble / dstRate // == p / 2^m exactly
-    val tMinA = new Array[Int](q)
-    val countA = new Array[Int](q)
-    val baseA = new Array[Int](q)
-    val tabB = Array.newBuilder[Double]
-    var off = 0
-    var r = 0
-    while (r < q) {
-      val center = r * step
-      val jInt = ((r.toLong * p) >> mBits).toInt
-      // ±2 pad covers ulp drift of ceil/floor(center ± halfWidth) at
-      // other j of the same phase; a drift past the pad falls back to
-      // direct evaluation in the inner loop (identical expressions)
-      val tMin = math.ceil(center - halfWidth).toInt - jInt - 2
-      val tMax = math.floor(center + halfWidth).toInt - jInt + 2
-      tMinA(r) = tMin
-      countA(r) = tMax - tMin + 1
-      baseA(r) = off
-      var t = tMin
-      while (t <= tMax) {
-        val d = (jInt + t) - center // exact; == t - frac(center) at any j
-        val x = math.Pi * scale * d
-        val sinc = if (math.abs(x) < 1e-12) 1.0 else math.sin(x) / x
-        val win = 0.5 * (1.0 + math.cos(math.Pi * d / halfWidth))
-        tabB += sinc += win
-        off += 2
-        t += 1
-      }
-      r += 1
-    }
-    val built = new PolyTable(mBits, p.toLong, tMinA, countA, baseA,
-      tabB.result())
-    if (polyTables.size < 64) polyTables.putIfAbsent(key, built)
-    Some(built)
-  }
-
-  /** Table-driven twin of [[resampleMemo]] — same loop, same inclusion
-    * bounds, same accumulation order; the sinc/window doubles come from
-    * [[PolyTable]] instead of being re-derived per (output, tap). */
-  private def resamplePoly(samples: Array[Short], srcRate: Int,
-      dstRate: Int, zeroCrossings: Int, pt: PolyTable): Array[Short] = {
-    val nIn = samples.length
-    val nOut = ((nIn.toLong * dstRate) / srcRate).toInt
-    // the exactness bound needs j*p < 2^52 for every output index
-    if (nOut > 0 && (nOut - 1).toLong * pt.pNum >= (1L << 52))
-      return resampleMemo(samples, srcRate, dstRate, zeroCrossings)
-    val out = new Array[Short](nOut)
-    val scale = math.min(1.0, dstRate.toDouble / srcRate)
-    val halfWidth = zeroCrossings / scale
-    val step = srcRate.toDouble / dstRate
-    val phaseMask = (1L << pt.mBits) - 1
-    val tab = pt.tab
-    var j = 0
-    while (j < nOut) {
-      val center = j * step
-      var i = math.max(0, math.ceil(center - halfWidth).toInt)
-      val iEnd = math.min(nIn - 1, math.floor(center + halfWidth).toInt)
-      val jp = j.toLong * pt.pNum
-      val jInt = (jp >> pt.mBits).toInt
-      val phase = (jp & phaseMask).toInt
-      val tMin = pt.tMin(phase)
-      val cnt = pt.count(phase)
-      val base = pt.base(phase)
-      var acc = 0.0
-      while (i <= iEnd) {
-        val tt = i - jInt - tMin
-        if (tt >= 0 && tt < cnt) {
-          val k = base + 2 * tt
-          acc += samples(i) * scale * tab(k) * tab(k + 1)
-        } else {
-          // pad escape: evaluate directly — the identical expressions,
-          // so the sum is bit-identical either way
-          val d = i - center
-          val x = math.Pi * scale * d
-          val sinc = if (math.abs(x) < 1e-12) 1.0 else math.sin(x) / x
-          val win = 0.5 * (1.0 + math.cos(math.Pi * d / halfWidth))
-          acc += samples(i) * scale * sinc * win
-        }
         i += 1
       }
       val v = math.round(acc)

@@ -793,6 +793,44 @@ class EngineSpec extends AnyFunSuite {
     assert(collide.get("SELECT b", "k")("reparsed-b") == "plan-b")
   }
 
+  test("stream and batch entry points share one statement pipeline") {
+    val s = newSession()
+    s.execute("db1", "main", q("CREATE TABLE t (id INTEGER, name TEXT)"))
+    s.execute("db1", "main", q("INSERT INTO t VALUES (1, 'a'), (2, 'b')"))
+    def streamed(in: QueryInput, batchSize: Int = 4096): Vector[QueryResponse] = {
+      var out = Vector.empty[QueryResponse]
+      s.executeStreamed("db1", "main", in, batchSize = batchSize)(r => out :+= r)
+      out
+    }
+    // plan node details carry per-analysis expression ids (id#12L)
+    def norm(rows: Seq[Seq[SqlValue]]) = rows.map(_.map {
+      case SqlValue.TextVal(v) => SqlValue.TextVal(v.replaceAll("#\\d+", "#"))
+      case v => v
+    })
+    for (in <- Seq(q("EXPLAIN QUERY PLAN SELECT name FROM t WHERE id = 1"),
+        q("ANALYZE"), q("ANALYZE t"), q("REINDEX"),
+        q("SELECT name FROM t WHERE id = ?", Seq(Param.integer(2))),
+        q("SELECT nosuch FROM t"))) {
+      val a = s.execute("db1", "main", in)
+      val b = streamed(in)
+      assert(b.length == 1, in.statement)
+      assert(b.head.error == a.error, in.statement)
+      assert(b.head.columns == a.columns, in.statement)
+      assert(norm(b.head.rows) == norm(a.rows), in.statement)
+    }
+    // repeated stream SELECTs parse once and then hit the plan cache
+    val (h0, m0) = (s.planCache.hits, s.planCache.misses)
+    val in = q("SELECT name FROM t WHERE id > ?", Seq(Param.integer(0)))
+    (1 to 3).foreach(_ => streamed(in))
+    assert(s.planCache.misses == m0 + 1)
+    assert(s.planCache.hits == h0 + 2)
+    // batches split the same rows; the last one carries the latency
+    val batches = streamed(q("SELECT id FROM t ORDER BY id"), batchSize = 1)
+    assert(batches.map(_.rows) ==
+      Seq(Seq(Seq(SqlValue.IntVal(1))), Seq(Seq(SqlValue.IntVal(2)))))
+    assert(batches.last.latency > 0)
+  }
+
   test("branch created from a restored state sees the restored data") {
     // SURVEY §7.4 hard part 4: branch-from-restored-state composes
     // restore (manifest re-point) with branch (manifest copy).

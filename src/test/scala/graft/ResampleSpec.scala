@@ -24,6 +24,8 @@ class ResampleSpec extends AnyFunSuite {
     assert(AudioFeatures.resample(s, 16000, 8000).length == 500)
     assert(AudioFeatures.resample(s, 8000, 11025).length ==
       (1000L * 11025 / 8000).toInt) // non-integer ratio: 1378
+    assert(AudioFeatures.resample(Array.empty[Short], 8000, 16000).isEmpty)
+    assert(AudioFeatures.resample(Array[Short](7), 8000, 16000).length == 2)
   }
 
   test("upsampled tone matches the analytic tone sample-by-sample mid-clip") {
@@ -50,32 +52,18 @@ class ResampleSpec extends AnyFunSuite {
     assert(math.abs(rms - 8000.0 / math.sqrt(2.0)) < 0.05 * 8000.0 / math.sqrt(2.0))
   }
 
-  test("polyphase path == memoized direct evaluation, bitwise (r19)") {
-    // the r19 polyphase table must reproduce the r18 memo path EXACTLY —
-    // the p79 oracle hash rides on these samples. Cover: pow2-denominator
-    // pairs (the table path: up, down, integer-factor, and the
-    // non-integer-halfWidth 48k->32k case), a non-pow2 pair (falls back,
-    // trivially equal), degenerate lengths, and hostile content.
-    val rnd = new scala.util.Random(42)
-    val noisy = Array.fill[Short](8192)((rnd.nextInt(65536) - 32768).toShort)
-    val clipping = Array.tabulate[Short](4096)(i =>
-      if (i % 3 == 0) Short.MaxValue else if (i % 3 == 1) Short.MinValue
-      else 0)
-    val pairs = Seq((8000, 16000), (16000, 8000), (48000, 16000),
-      (48000, 32000), (22050, 44100), (44100, 16000), (8000, 11025))
-    for ((src, dst) <- pairs; s <- Seq(noisy, clipping,
-        tone(8192, 440.0, src), Array.empty[Short], Array[Short](7))) {
-      val a = AudioFeatures.resample(s, src, dst)
-      val b = AudioFeatures.resampleMemo(s, src, dst, 16)
-      assert(a.toSeq == b.toSeq, s"$src->$dst diverged on n=${s.length}")
+  test("3:4 rate pairs reconstruct the tone mid-clip (12k->16k, 24k->32k)") {
+    // output j sits at fractional source phase (3j mod 4)/4 — unlike the
+    // 1:2 pairs, consecutive outputs do not walk the phases in order, so a
+    // kernel lookup keyed on the wrong phase is caught here
+    val f = 500.0
+    for ((src, dst) <- Seq((12000, 16000), (24000, 32000))) {
+      val up = AudioFeatures.resample(tone(8192, f, src), src, dst)
+      val err = (64 until up.length - 64).map { j =>
+        math.abs(up(j) - 8000.0 * math.sin(2.0 * math.Pi * f * j / dst))
+      }
+      assert(err.max < 80.0, s"$src->$dst max mid-clip error ${err.max}")
     }
-    // the pairs we claim take the table path actually have a table,
-    // and the non-pow2 pair does not
-    assert(AudioFeatures.polyTable(8000, 16000, 16).isDefined)
-    assert(AudioFeatures.polyTable(16000, 8000, 16).isDefined)
-    assert(AudioFeatures.polyTable(48000, 32000, 16).isDefined)
-    assert(AudioFeatures.polyTable(44100, 16000, 16).isEmpty) // q=160
-    assert(AudioFeatures.polyTable(8000, 11025, 16).isEmpty)  // q=441
   }
 
   test("above-target-Nyquist energy is filtered out, not folded") {
