@@ -5,6 +5,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import graft.engine._
 
 /** HTTP/JSON + binary-streaming query API over GraftSession — the
@@ -60,7 +61,7 @@ class HttpApi(session: GraftSession, anonymousRoot: Boolean = false,
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/v1", (ex: HttpExchange) => handleSafe(ex))
     // daemon threads so an un-stopped server never pins the JVM
-    pool = java.util.concurrent.Executors.newFixedThreadPool(8, r => {
+    pool = java.util.concurrent.Executors.newFixedThreadPool(HttpApi.PoolThreads, r => {
       val t = new Thread(r); t.setDaemon(true); t
     })
     server.setExecutor(pool)
@@ -202,9 +203,12 @@ class HttpApi(session: GraftSession, anonymousRoot: Boolean = false,
       case ("GET", "health" :: Nil) =>
         return reply(ex, 200, okJson("\"ok\""))
       case ("GET", "status" :: Nil) =>
+        val (hits, misses) = session.planCache.counts
         return reply(ex, 200, okJson(
           s"""{"uptime_ms":${System.currentTimeMillis() - startedAt},""" +
-            s""""databases":${session.catalog.listDatabases().size}}"""))
+            s""""databases":${session.catalog.listDatabases().size},""" +
+            s""""plan_cache_hits":$hits,"plan_cache_misses":$misses,""" +
+            s""""codegen_compiles":${CodegenMetrics.METRIC_COMPILATION_TIME.getCount}}"""))
       case _ => ()
     }
 
@@ -771,6 +775,9 @@ class HttpApi(session: GraftSession, anonymousRoot: Boolean = false,
 }
 
 object HttpApi {
+  /** Request handler threads; each gets its own engine Spark session. */
+  val PoolThreads = 8
+
   /** The canonical route surface, one (method, path template) per `case`
     * in [[HttpApi]]'s dispatch above — keep the two adjacent and in the
     * same order so a route added to one without the other is caught in

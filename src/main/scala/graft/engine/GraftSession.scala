@@ -1242,9 +1242,12 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
     * other's views mid-query and read the wrong tenant's data. Each
     * handler thread now gets its own `spark.newSession()` (same
     * SparkContext/SharedState, private temp-view catalog + SQLConf), so
-    * view registration is isolated by construction. */
+    * view registration is isolated by construction. Bound values reach
+    * generated code as references (`installLiteralHoisting`), so a hot
+    * parameterized statement compiles once, not once per value. */
   private val threadSession = new ThreadLocal[SparkSession] {
     override def initialValue(): SparkSession = {
+      org.apache.spark.sql.GraftSqlBridge.installLiteralHoisting(spark)
       val s = spark.newSession()
       // the engine's SQL dialect accepts SQLite's core-function NAMES
       // (iif/strftime/group_concat/json_set/...), resolved to the same
@@ -2028,7 +2031,9 @@ class GraftSession(val spark: SparkSession, rootDir: Path,
         // plan cache (B4): parse once per (sql, key), then EXECUTE the
         // cached parsed plan (Dataset.ofRows) — analysis still runs per
         // execution because view state may have changed, but a hot point
-        // query skips the ANTLR parse entirely
+        // query skips the ANTLR parse entirely, and its bound values reach
+        // generated code as references, so its compiled code is reused
+        // across parameter values
         val plan = planCache.get(stmtM, key.id)(
           sess.sessionState.sqlParser.parsePlan(stmtM))
         org.apache.spark.sql.GraftSqlBridge.ofRows(

@@ -39,5 +39,8 @@ class StatementCache[P](maxEntries: Int = 256,
     else { misses += 1; val p = parse; map.put(k, Entry(sql, p)); p }
   }
 
+  /** (hits, misses), read together. */
+  def counts: (Long, Long) = synchronized((hits, misses))
+
   def size: Int = synchronized(map.size())
 }

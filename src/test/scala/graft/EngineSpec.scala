@@ -831,6 +831,103 @@ class EngineSpec extends AnyFunSuite {
     assert(batches.last.latency > 0)
   }
 
+  test("a hot parameterized point read reuses one compiled class across keys") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val s = newSession()
+    s.execute("db1", "main", q("CREATE TABLE t (id INTEGER, name TEXT)"))
+    s.execute("db1", "main", q("INSERT INTO t VALUES " +
+      (1 to 41).map(i => s"($i, 'n$i')").mkString(", ")))
+    val sql = "SELECT * FROM t WHERE id = ?"
+    def read(i: Int) = q(sql, Seq(Param.integer(i)))
+    def expected(i: Int) = Seq(Seq(SqlValue.IntVal(i), SqlValue.TextVal(s"n$i")))
+    assert(s.execute("db1", "main", read(41)).rows == expected(41)) // warm-up
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    for (i <- 1 to 20) {
+      val r = s.execute("db1", "main", read(i))
+      assert(r.error.isEmpty && r.rows == expected(i), s"execute key $i: $r")
+    }
+    for (i <- 21 to 40) {
+      var out = Vector.empty[QueryResponse]
+      s.executeStreamed("db1", "main", read(i))(r => out :+= r)
+      assert(out.map(_.rows) == Seq(expected(i)), s"stream key $i: $out")
+    }
+    val grew = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+    assert(grew <= 1, s"$grew codegen compilations for 40 distinct-key reads")
+  }
+
+  test("hoisted bound values keep query results, frames and plan text") {
+    val s = newSession()
+    s.execute("db1", "main", q("CREATE TABLE h (id INTEGER, r REAL, day TEXT, at TEXT)"))
+    s.execute("db1", "main", q("INSERT INTO h VALUES " +
+      "(-7, -1.5, '2024-01-01', '2024-01-01 08:00:00'), " +
+      "(1, 0.25, '2024-01-02', '2024-01-02 12:30:00'), " +
+      "(2, 2.5, '2024-01-03', '2024-01-03 23:59:59'), " +
+      s"(${Long.MaxValue}, 9.75, '2024-01-04', '2024-01-04 00:00:00')"))
+    def ids(stmt: String, params: Param*): Seq[Long] = {
+      val r = s.execute("db1", "main", q(stmt, params))
+      assert(r.error.isEmpty, s"$stmt: ${r.error}")
+      r.rows.map(_.head match { case SqlValue.IntVal(v) => v; case v => fail(s"$stmt: $v") })
+    }
+    val byId = "SELECT id FROM h WHERE id = ? ORDER BY id"
+    assert(ids(byId, Param.integer(-7)) == Seq(-7L))
+    assert(ids(byId, Param.integer(Long.MaxValue)) == Seq(Long.MaxValue))
+    assert(ids(byId, Param.integer(3)).isEmpty)
+    assert(ids(byId, Param.nul).isEmpty) // NULL = NULL is unknown
+    assert(ids("SELECT id FROM h WHERE id < ? ORDER BY id", Param.integer(Long.MaxValue)) ==
+      Seq(-7L, 1L, 2L))
+    assert(ids("SELECT id FROM h WHERE r > ? ORDER BY id", Param.float(0.25)) ==
+      Seq(2L, Long.MaxValue))
+    assert(ids("SELECT id FROM h WHERE r < ? ORDER BY id", Param.float(-1.0)) == Seq(-7L))
+    assert(ids("SELECT id FROM h WHERE CAST(day AS DATE) >= DATE '2024-01-03' ORDER BY id") ==
+      Seq(2L, Long.MaxValue))
+    assert(ids("SELECT id FROM h WHERE CAST(at AS TIMESTAMP) < " +
+      "TIMESTAMP '2024-01-02 12:30:01' ORDER BY id") == Seq(-7L, 1L))
+    // bound values in the projection, including a NULL one
+    val proj = s.execute("db1", "main", q(
+      "SELECT id + ?, r * ?, ?, datediff(DATE '2024-01-05', CAST(day AS DATE)) FROM h WHERE id = ?",
+      Seq(Param.integer(10), Param.float(2.0), Param.nul, Param.integer(1))))
+    assert(proj.error.isEmpty, proj.error)
+    assert(proj.rows == Seq(Seq(SqlValue.IntVal(11), SqlValue.RealVal(0.5),
+      SqlValue.NullVal, SqlValue.IntVal(3))))
+    // window frame bounds are literals too and stay as the frame declares
+    val win = s.execute("db1", "main", q("SELECT id, SUM(r) OVER (ORDER BY id " +
+      "ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) FROM h WHERE id > ? ORDER BY id",
+      Seq(Param.integer(-100))))
+    assert(win.error.isEmpty, win.error)
+    assert(win.rows == Seq(
+      Seq(SqlValue.IntVal(-7), SqlValue.RealVal(-1.5)),
+      Seq(SqlValue.IntVal(1), SqlValue.RealVal(-1.25)),
+      Seq(SqlValue.IntVal(2), SqlValue.RealVal(2.75)),
+      Seq(SqlValue.IntVal(Long.MaxValue), SqlValue.RealVal(12.25))))
+    // the plan still pushes the real value into the scan and renders the
+    // Filter with it
+    val eqp = s.execute("db1", "main",
+      q("EXPLAIN QUERY PLAN SELECT id FROM h WHERE id = ?", Seq(Param.integer(2))))
+    assert(eqp.error.isEmpty, eqp.error)
+    val details = eqp.rows.map(_(3) match {
+      case SqlValue.TextVal(v) => v.replaceAll("#\\d+", "#")
+      case v => fail(s"EQP detail $v")
+    })
+    assert(details.contains("Filter (isnotnull(id#L) AND (id#L = 2))"), details)
+    assert(details.exists(_.contains("PushedFilters: [IsNotNull(id), EqualTo(id,2)]")), details)
+    // at the plan level: Filter and Project values are hoisted, the
+    // window frame's bounds are not (the engine session above installed
+    // the rule on these shared extensions)
+    import org.apache.spark.sql.GraftSqlBridge.HoistedLiteral
+    val df = spark.newSession().sql("SELECT id * 3 AS x, SUM(id) OVER (ORDER BY id " +
+      "ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) AS w FROM range(9) WHERE id > 2")
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      (3L to 8L).map(i => (3 * i, if (i == 3) 3L else 2 * i - 1)))
+    def hoisted(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.expressions.flatMap(_.collect { case h: HoistedLiteral => h.value })
+    // executed, so the adaptive plan's final stages are what is walked
+    val byNode = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case p => p.nodeName -> hoisted(p) }
+    assert(byNode.collect { case ("Filter", v) => v }.flatten == Seq(2L), byNode)
+    assert(byNode.collect { case ("Project", v) => v }.flatten == Seq(3L), byNode)
+    assert(byNode.forall { case (n, v) => Set("Filter", "Project")(n) || v.isEmpty }, byNode)
+  }
+
   test("branch created from a restored state sees the restored data") {
     // SURVEY §7.4 hard part 4: branch-from-restored-state composes
     // restore (manifest re-point) with branch (manifest copy).

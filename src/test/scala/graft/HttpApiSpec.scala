@@ -506,6 +506,66 @@ class HttpApiSpec extends AnyFunSuite {
     assert(st.path("databases").asInt() >= 0)
   }
 
+  test("status counts plan-cache hits and codegen compiles around signed point reads") {
+    engine.accessKeys.put(AccessKey("pk-key", secret = "pk-secret", statements = Seq(
+      AccessKeyStatement("allow", "*", Seq("*")))))
+    def signedQuery(path: String, body: String): HttpResponse[String] = {
+      val date = (System.currentTimeMillis() / 1000).toString
+      val headers = Map("content-type" -> "application/json",
+        "host" -> s"127.0.0.1:$port", "x-lbdb-date" -> date)
+      val token = RequestAuth.signRequest("pk-key", "pk-secret", "POST", path,
+        headers, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        .header("Authorization", token).header("Content-Type", "application/json")
+        .header("x-lbdb-date", date).POST(BodyPublishers.ofString(body)).build(),
+        BodyHandlers.ofString())
+    }
+    post("/v1/databases", """{"name":"dbpk"}""")
+    val path = "/v1/databases/dbpk/main/query"
+    post(path, """{"queries":[{"id":"c","statement":"CREATE TABLE pk (id INTEGER, v TEXT)"},""" +
+      """{"id":"i","statement":"INSERT INTO pk VALUES """ +
+      (0 to 10).map(i => s"($i, 'v$i')").mkString(", ") + """"}]}""")
+    def readBody(i: Int): String = """{"queries":[{"id":"r","statement":""" +
+      s""""SELECT v FROM pk WHERE id = ?","parameters":[{"type":"INTEGER","value":$i}]}]}"""
+    def read(i: Int): String = {
+      val r = signedQuery(path, readBody(i))
+      assert(r.statusCode() == 200, r.body())
+      mapper.readTree(r.body()).path("data").get(0).path("rows").get(0).get(0).asText()
+    }
+    def status(name: String): Long =
+      mapper.readTree(get("/v1/status").body()).path("data").path(name).asLong(-1)
+    assert(read(0) == "v0") // the signed key's plan-cache entry
+    // Spark caches a compiled class per session and the engine keeps one
+    // session per handler thread, so first warm every thread: hold one read
+    // per thread (the server answers `Expect: 100-continue` once a handler
+    // thread has the request), then send their bodies
+    val held = (1 to HttpApi.PoolThreads).map { i =>
+      val body = readBody(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val sock = new java.net.Socket("127.0.0.1", port)
+      sock.setSoTimeout(60000)
+      sock.getOutputStream.write((s"POST $path HTTP/1.1\r\nHost: 127.0.0.1:$port\r\n" +
+        s"Content-Type: application/json\r\nContent-Length: ${body.length}\r\n" +
+        "Expect: 100-continue\r\n\r\n").getBytes)
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(sock.getInputStream))
+      val line = in.readLine()
+      assert(line.startsWith("HTTP/1.1 100"), line)
+      while (in.readLine().nonEmpty) () // rest of the interim reply
+      (sock, in, body)
+    }
+    held.foreach { case (sock, _, body) => sock.getOutputStream.write(body) }
+    held.foreach { case (sock, in, _) =>
+      val line = in.readLine()
+      assert(line.startsWith("HTTP/1.1 200"), line)
+      sock.close()
+    }
+    val (hits, compiles) = (status("plan_cache_hits"), status("codegen_compiles"))
+    assert(hits >= 1 && status("plan_cache_misses") >= 1 && compiles >= 1)
+    for (i <- 1 to 10) assert(read(i) == s"v$i")
+    assert(status("plan_cache_hits") == hits + 10)
+    val grew = status("codegen_compiles") - compiles
+    assert(grew <= 1, s"$grew codegen compilations for 10 distinct-key reads")
+  }
+
   test("metrics endpoint returns step-merged latency buckets") {
     post("/v1/databases", """{"name":"db5"}""")
     post("/v1/databases/db5/main/query",
