@@ -22,10 +22,21 @@ object QueryStream {
   private def u32(v: Int): Array[Byte] =
     ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(v).array()
 
-  private def readU32(in: InputStream): Int = {
-    val b = in.readNBytes(4)
-    require(b.length == 4, "truncated length")
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt
+  /** Read `n` bytes, or fewer only at end of stream. The stream is never
+    * asked for more than is still missing: `readNBytes` ends with one more
+    * read, and on a chunked request body that read waits for the client's
+    * next chunk, so an interactive client waiting for a reply would hang. */
+  private def readFully(in: InputStream, n: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(math.max(0, math.min(n, 8192)))
+    val buf = new Array[Byte](math.max(0, math.min(n, 8192)))
+    var left = n
+    while (left > 0) {
+      val k = in.read(buf, 0, math.min(buf.length, left))
+      if (k < 0) return out.toByteArray
+      out.write(buf, 0, k)
+      left -= k
+    }
+    out.toByteArray
   }
 
   def writeMessage(out: OutputStream, msgType: Int, body: Array[Byte]): Unit = {
@@ -94,11 +105,11 @@ object QueryStream {
       flushBytes: Int = 1 << 20): Unit = {
     var open = true
     while (open) {
-      val header = in.readNBytes(5)
+      val header = readFully(in, 5)
       if (header.length < 5) return
       val msgType = header(0) & 0xFF
       val len = ByteBuffer.wrap(header, 1, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
-      val body = in.readNBytes(len)
+      val body = readFully(in, len)
       require(body.length == len, "incomplete message")
       msgType match {
         case Open =>

@@ -556,6 +556,41 @@ class AuthSpec extends AnyFunSuite {
     assert(ok.statusCode() == 200, ok.body())
   }
 
+  test("a clause keyword inside a column name cannot cut the read walk short") {
+    assert(admin.id == "admin-key")
+    def query(stmt: String, keyId: String, secret: String): String = {
+      val r = signed("POST", "/v1/databases/kwdb/main/query",
+        s"""{"queries":[{"id":"q","statement":"$stmt"}]}""", keyId, secret)
+      mapper.readTree(r.body()).path("data").get(0).path("error").asText()
+    }
+    assert(signed("POST", "/v1/databases", """{"name":"kwdb"}""",
+      "admin-key", "admin-secret").statusCode() == 201)
+    Seq("CREATE TABLE t (id INTEGER, v INTEGER, is_returning INTEGER, " +
+        "conflict_count INTEGER)",
+      "INSERT INTO t VALUES (1, 0, 0, 0)",
+      "CREATE TABLE secret (x INTEGER)",
+      "INSERT INTO secret VALUES (42)").foreach { st =>
+      assert(query(st, "admin-key", "admin-secret").isEmpty, st)
+    }
+    session.accessKeys.put(AccessKey("kw-key", secret = "kw-secret",
+      statements = Seq(
+        AccessKeyStatement("allow", "*", Seq("*")),
+        AccessKeyStatement("deny", "database:kwdb:branch:main:table:secret",
+          Seq("database:read")))))
+    // `returning` and `conflict` inside a column name are not the
+    // statement's RETURNING / ON CONFLICT suffix: every read is checked
+    Seq("v", "is_returning", "conflict_count").foreach { c =>
+      val err = query(s"UPDATE t SET $c = (SELECT x FROM secret LIMIT 1) WHERE id = 1",
+        "kw-key", "kw-secret")
+      assert(err.contains("secret"), s"$c: $err")
+    }
+    val got = signed("POST", "/v1/databases/kwdb/main/query",
+      """{"queries":[{"id":"s","statement":"SELECT v, is_returning, conflict_count FROM t"}]}""",
+      "admin-key", "admin-secret")
+    val row = mapper.readTree(got.body()).path("data").get(0).path("rows").get(0)
+    assert((0 until 3).map(row.get(_).asLong()) == Seq(0L, 0L, 0L), got.body())
+  }
+
   test("keys routes demand cluster-manage scope over HTTP") {
     // data-plane keys (even database:* with all actions) cannot rotate
     session.accessKeys.put(AccessKey("dataonly", secret = "d-secret",

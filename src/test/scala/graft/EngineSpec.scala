@@ -755,6 +755,199 @@ class EngineSpec extends AnyFunSuite {
     assert(lit.error.isEmpty && lit.rows.isEmpty && lit.changes == 1)
     val got = s.execute("db1", "main", q("SELECT name FROM r WHERE id = 9"))
     assert(got.rows == Seq(Seq(SqlValue.TextVal("not returning anything"))))
+    // ... and so is the keyword inside a literal of the RETURNING list
+    val litIns = s.execute("db1", "main",
+      q("INSERT INTO r VALUES (1, 'ada') RETURNING id, 'a returning b' AS s"))
+    assert(litIns.error.isEmpty, litIns.error)
+    assert(litIns.columns == Seq("id", "s"))
+    assert(litIns.rows == Seq(Seq(SqlValue.IntVal(1), SqlValue.TextVal("a returning b"))))
+    val litUpd = s.execute("db1", "main", q(
+      "UPDATE r SET name = 'bob' WHERE id = 1 RETURNING id, 'no returning here' AS s"))
+    assert(litUpd.error.isEmpty, litUpd.error)
+    assert(litUpd.changes == 2 && litUpd.rows ==
+      Seq.fill(2)(Seq(SqlValue.IntVal(1), SqlValue.TextVal("no returning here"))))
+  }
+
+  test("a keyword inside an identifier or a quoted name is not a clause boundary") {
+    val s = newSession()
+    s.execute("db1", "main",
+      q("CREATE TABLE kw (id INTEGER, from_ts INTEGER, order_from INTEGER)"))
+    s.execute("db1", "main", q("INSERT INTO kw VALUES (1, 0, 0), (2, 0, 0)"))
+    val a = s.execute("db1", "main", q("UPDATE kw SET from_ts = 5 WHERE id = 1"))
+    assert(a.error.isEmpty && a.changes == 1, a.error)
+    val b = s.execute("db1", "main", q("UPDATE kw SET order_from = 6 WHERE id = 1"))
+    assert(b.error.isEmpty && b.changes == 1, b.error)
+    assert(s.execute("db1", "main", q("SELECT from_ts, order_from FROM kw ORDER BY id"))
+      .rows == Seq(Seq(SqlValue.IntVal(5), SqlValue.IntVal(6)),
+        Seq(SqlValue.IntVal(0), SqlValue.IntVal(0))))
+    // a SET term without `=` is a parse error, not an internal failure
+    val bad = s.execute("db1", "main", q("UPDATE kw SET from_ts WHERE id = 1"))
+    assert(bad.error.contains("malformed SET clause"), bad.error)
+    // `_` joins a word; double-quoted names are skipped like literals
+    assert(Sql.splitOnTopLevelKeyword("a = from_x", "from").isEmpty)
+    assert(Sql.splitOnTopLevelKeyword("x_returning = 1", "returning").isEmpty)
+    assert(Sql.splitOnTopLevelKeyword("\"a from b\" = 1 FROM t", "from") ==
+      Some(("\"a from b\" = 1", "t")))
+    assert(Sql.splitOnTopLevelKeyword("'it''s from' FROM t", "from") ==
+      Some(("'it''s from'", "t")))
+  }
+
+  test("every DML statement lands through one path: per-form parity") {
+    def iv(n: Long): SqlValue = SqlValue.IntVal(n)
+    def tv(t: String): SqlValue = SqlValue.TextVal(t)
+    def fresh(): GraftSession = {
+      val s = newSession()
+      Seq(
+        "CREATE TABLE p (id INTEGER PRIMARY KEY, a INTEGER CHECK (a < 100), " +
+          "body TEXT, code TEXT UNIQUE, dbl INTEGER GENERATED ALWAYS AS (a * 2))",
+        "INSERT INTO p (id, a, body, code) VALUES (1, 1, 'apple pie', 'c1'), " +
+          "(2, 2, 'banana split', 'c2'), (3, 3, 'cherry tart', 'c3')",
+        "CREATE TABLE src (sid INTEGER, na INTEGER)",
+        "INSERT INTO src VALUES (1, 40), (2, 41), (3, 42)",
+        "CREATE VIRTUAL TABLE pf USING fts5(body, content='p', content_rowid='id')",
+        "CREATE TABLE plog (ev TEXT, id INTEGER, olda INTEGER, newa INTEGER)"
+      ).foreach { st =>
+        val r = s.execute("db1", "main", q(st))
+        assert(r.error.isEmpty, s"$st: ${r.error}")
+      }
+      s
+    }
+    val failures = scala.collection.mutable.ArrayBuffer[String]()
+    def row(form: String, name: String)(body: => Unit): Unit =
+      try body catch {
+        case scala.util.control.NonFatal(e) => failures += s"$form / $name: ${e.getMessage}"
+      }
+    def run(s: GraftSession, st: String, txn: String = ""): QueryResponse =
+      s.execute("db1", "main", q(st, txn = txn))
+    def ok(s: GraftSession, st: String, txn: String = ""): QueryResponse = {
+      val r = run(s, st, txn)
+      assert(r.error.isEmpty, s"$st: ${r.error}")
+      r
+    }
+    def inTxn(s: GraftSession, st: String): Unit = {
+      val t = ok(s, "BEGIN").transactionId
+      ok(s, st, t)
+      ok(s, "COMMIT", t)
+    }
+    def version(s: GraftSession) = s.catalog.currentVersion("db1", "main", "p").map(_.ts)
+    def aborts(s: GraftSession, st: String, msg: String): Unit = {
+      val before = version(s)
+      val r = run(s, st)
+      assert(r.error.contains(msg), s"$st: ${r.error}")
+      assert(version(s) == before, s"$st landed a version")
+    }
+    def hits(s: GraftSession, term: String): Seq[SqlValue] =
+      ok(s, s"SELECT doc FROM pf WHERE pf MATCH '$term' ORDER BY doc").rows.map(_.head)
+    def aOf(s: GraftSession, id: Int): Seq[SqlValue] =
+      ok(s, s"SELECT a, dbl FROM p WHERE id = $id").rows.head
+    def log(s: GraftSession): Seq[Seq[SqlValue]] =
+      ok(s, "SELECT ev, id, olda, newa FROM plog ORDER BY id").rows
+
+    // the three UPDATE forms: each takes a SET list, a target id and a suffix
+    val updates: Seq[(String, (String, Int, String) => String)] = Seq(
+      "UPDATE" -> ((set, id, sfx) => s"UPDATE p SET $set WHERE id = $id$sfx"),
+      "UPDATE...FROM" -> ((set, id, sfx) =>
+        s"UPDATE p SET $set FROM src s WHERE p.id = s.sid AND s.sid = $id$sfx"),
+      "upsert DO UPDATE" -> ((set, id, sfx) =>
+        s"INSERT INTO p (id, a, body, code) VALUES ($id, 0, 'zz', 'zz$id') " +
+          s"ON CONFLICT (id) DO UPDATE SET $set$sfx"))
+    updates.foreach { case (form, upd) =>
+      val s = fresh()
+      row(form, "generated column recomputes") {
+        ok(s, upd("a = 7", 1, ""))
+        assert(aOf(s, 1) == Seq(iv(7), iv(14)))
+      }
+      row(form, "CHECK violation aborts") {
+        aborts(s, upd("a = 500", 1, ""), "CHECK constraint failed")
+      }
+      row(form, "UNIQUE violation from SET aborts") {
+        aborts(s, upd("code = 'c2'", 1, ""), "UNIQUE constraint failed: p.code")
+      }
+      row(form, "RETURNING sees post-update values") {
+        val r = ok(s, upd("a = 8", 1, " RETURNING id, a, dbl"))
+        assert(r.changes == 1 && r.rows == Seq(Seq(iv(1), iv(8), iv(16))), r.rows)
+      }
+      row(form, "repeated SET column is rightmost-wins") {
+        ok(s, upd("a = 9, a = 4", 1, ""))
+        assert(aOf(s, 1) == Seq(iv(4), iv(8)))
+      }
+      row(form, "FTS follows the new text") {
+        ok(s, upd("body = 'zebra crossing'", 2, ""))
+        assert(hits(s, "zebra") == Seq(iv(2)) && hits(s, "banana").isEmpty)
+      }
+      row(form, "FTS follows the new text in a transaction") {
+        inTxn(s, upd("body = 'yak wool'", 3, ""))
+        assert(hits(s, "yak") == Seq(iv(3)) && hits(s, "cherry").isEmpty)
+      }
+      row(form, "AFTER UPDATE trigger sees OLD and NEW") {
+        ok(s, "CREATE TRIGGER pt AFTER UPDATE ON p BEGIN " +
+          "INSERT INTO plog VALUES ('u', OLD.id, OLD.a, NEW.a); END")
+        ok(s, upd("a = 50", 2, ""))
+        assert(log(s) == Seq(Seq(tv("u"), iv(2), iv(2), iv(50))))
+      }
+    }
+
+    // the two append forms: each takes an id, a body and a code
+    val inserts: Seq[(String, (Int, String, String) => String)] = Seq(
+      "INSERT" -> ((id, body, code) =>
+        s"INSERT INTO p (id, a, body, code) VALUES ($id, 5, '$body', '$code')"),
+      "ON CONFLICT DO NOTHING" -> ((id, body, code) =>
+        s"INSERT INTO p (id, a, body, code) VALUES ($id, 5, '$body', '$code'), " +
+          "(1, 5, 'dup', 'cdup') ON CONFLICT (id) DO NOTHING"))
+    inserts.foreach { case (form, ins) =>
+      val s = fresh()
+      row(form, "RETURNING and lastInsertRowId") {
+        val r = ok(s, ins(10, "kiwi fruit", "c10") + " RETURNING id, dbl")
+        assert(r.changes == 1 && r.rows == Seq(Seq(iv(10), iv(10))), r.rows)
+        assert(r.lastInsertRowId == 10)
+      }
+      row(form, "FTS indexes the new row") {
+        assert(hits(s, "kiwi") == Seq(iv(10)))
+      }
+      row(form, "FTS indexes the new row in a transaction") {
+        inTxn(s, ins(11, "lime zest", "c11"))
+        assert(hits(s, "lime") == Seq(iv(11)))
+      }
+      row(form, "a second UNIQUE set is enforced") {
+        aborts(s, ins(12, "mango", "c2"), "UNIQUE constraint failed: p.code")
+      }
+      row(form, "AFTER INSERT trigger sees NEW") {
+        ok(s, "CREATE TRIGGER pt AFTER INSERT ON p BEGIN " +
+          "INSERT INTO plog VALUES ('i', NEW.id, NULL, NEW.a); END")
+        val r = ok(s, ins(13, "nectarine", "c13"))
+        assert(r.lastInsertRowId == 13)
+        assert(log(s) == Seq(Seq(tv("i"), iv(13), SqlValue.NullVal, iv(5))))
+      }
+    }
+
+    locally {
+      val form = "DELETE"
+      val s = fresh()
+      row(form, "RETURNING and lastInsertRowId") {
+        val r = ok(s, "DELETE FROM p WHERE id = 1 RETURNING id, body")
+        assert(r.changes == 1 && r.rows == Seq(Seq(iv(1), tv("apple pie"))), r.rows)
+        assert(r.lastInsertRowId == 0)
+      }
+      row(form, "FTS forgets the row") {
+        assert(hits(s, "apple").isEmpty && hits(s, "banana") == Seq(iv(2)))
+      }
+      row(form, "FTS forgets the row in a transaction") {
+        inTxn(s, "DELETE FROM p WHERE id = 2")
+        assert(hits(s, "banana").isEmpty && hits(s, "cherry") == Seq(iv(3)))
+      }
+      row(form, "a second UNIQUE set is still enforced") {
+        aborts(s, "INSERT INTO p (id, a, body, code) VALUES (20, 5, 'x', 'c3')",
+          "UNIQUE constraint failed: p.code")
+        ok(s, "INSERT INTO p (id, a, body, code) VALUES (21, 5, 'x', 'c1')")
+      }
+      row(form, "AFTER DELETE trigger sees OLD") {
+        ok(s, "CREATE TRIGGER pt AFTER DELETE ON p BEGIN " +
+          "INSERT INTO plog VALUES ('d', OLD.id, OLD.a, NULL); END")
+        ok(s, "DELETE FROM p WHERE id = 3")
+        assert(log(s) == Seq(Seq(tv("d"), iv(3), iv(3), SqlValue.NullVal)))
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
   }
 
   test("statement cache: repeated statements hit, keys partition the cache") {

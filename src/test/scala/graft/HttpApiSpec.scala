@@ -132,6 +132,73 @@ class HttpApiSpec extends AnyFunSuite {
     assert(qr.rows == Seq(Seq(SqlValue.IntVal(7L))))
   }
 
+  test("an interactive stream client gets a frame's reply before it sends more") {
+    post("/v1/databases", """{"name":"dbi"}""")
+    post("/v1/databases/dbi/main/query",
+      """{"queries":[{"id":"c","statement":"CREATE TABLE s (v INTEGER)"},
+        |{"id":"i","statement":"INSERT INTO s VALUES (8)"}]}""".stripMargin)
+    val sock = new java.net.Socket("127.0.0.1", port)
+    sock.setSoTimeout(30000)
+    try {
+      val out = sock.getOutputStream
+      // one chunk per message, each flushed before the client waits
+      def send(msgType: Int, body: Array[Byte]): Unit = {
+        val m = new java.io.ByteArrayOutputStream()
+        QueryStream.writeMessage(m, msgType, body)
+        out.write(s"${Integer.toHexString(m.size())}\r\n".getBytes)
+        out.write(m.toByteArray)
+        out.write("\r\n".getBytes)
+        out.flush()
+      }
+      out.write(("POST /v1/databases/dbi/main/query/stream HTTP/1.1\r\n" +
+        s"Host: 127.0.0.1:$port\r\nTransfer-Encoding: chunked\r\n\r\n").getBytes)
+      send(QueryStream.Open, Array.emptyByteArray)
+      send(QueryStream.Frame,
+        QueryStream.encodeFrame(Seq(QueryInput("q1", "SELECT v FROM s"))))
+      // the reply body is chunked too: decode it as it arrives
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(sock.getInputStream))
+      def line(): String = {
+        val sb = new StringBuilder
+        var c = in.read()
+        while (c != '\n') { if (c != '\r') sb.append(c.toChar); c = in.read() }
+        sb.toString
+      }
+      assert(line().startsWith("HTTP/1.1 200"))
+      while (line().nonEmpty) ()
+      var chunkLeft = 0
+      def bytes(n: Int): Array[Byte] = {
+        val b = new Array[Byte](n)
+        var got = 0
+        while (got < n) {
+          if (chunkLeft == 0) chunkLeft = Integer.parseInt(line().trim, 16)
+          val k = math.min(chunkLeft, n - got)
+          in.readFully(b, got, k)
+          got += k; chunkLeft -= k
+          if (chunkLeft == 0) line() // the CRLF closing the chunk
+        }
+        b
+      }
+      def message(): (Int, Array[Byte]) = {
+        val hdr = bytes(5)
+        val len = java.nio.ByteBuffer.wrap(hdr, 1, 4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        (hdr(0) & 0xFF, bytes(len))
+      }
+      assert(message()._1 == QueryStream.Open)
+      val (t, body) = message()
+      assert(t == QueryStream.Frame)
+      val entries = QueryStream.decodeResponseFrame(body)
+      assert(entries.length == 1 && !entries.head._1)
+      assert(Wire.decodeResponse(entries.head._2).rows == Seq(Seq(SqlValue.IntVal(8L))))
+      // only now does the client close the conversation
+      send(QueryStream.Close, Array.emptyByteArray)
+      out.write("0\r\n\r\n".getBytes)
+      out.flush()
+      assert(Integer.parseInt(line().trim, 16) == 0, "reply ends after Close")
+    } finally sock.close()
+  }
+
   test("large results stream as chunked entries with bounded frames") {
     post("/v1/databases", """{"name":"dbbig"}""")
     post("/v1/databases/dbbig/main/query",
